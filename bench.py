@@ -387,8 +387,8 @@ def main() -> None:
     # so its timed number is near-zero by construction.
     # polygonize likewise warms the polygonize family's shared persists
     # (_poly_shared: rasterized zone pixels AND labeled components) —
-    # whichever family member runs first in registry order (footprint in
-    # the r4/r5 ordering) otherwise absorbs both materializations
+    # whichever family member runs first in registry order (footprint:
+    # queries() is sorted by name) otherwise absorbs both materializations
     # (~7s of its r4 10.9s wall). Same marginal-work convention as the
     # dedup family above.
     # overlay_erase warms the overlay family's shared codegen classes
@@ -398,7 +398,7 @@ def main() -> None:
     # of janino compile (the BENCH overlay_union 9s outlier vs its own
     # 1.8-2.9s history). session.py now also pins
     # spark.sql.codegen.cache.maxEntries=4096 so the warmed classes
-    # survive the whole 121-query sweep.
+    # survive the whole 123-query sweep.
     for warm in ("swap_xy", "hillshade", "simhash", "polygonize", "overlay_erase"):
         if warm in queries:
             try:

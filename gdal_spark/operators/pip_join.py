@@ -10,8 +10,9 @@ algebra (SURVEY.md §2.2/§2.3) as a Spark join:
 
   engine, broadcast strategy (zones small — the common case):
   pages ⋈ broadcast(zone envelopes) on bbox range predicate (Catalyst
-  BroadcastNestedLoopJoin over tiny dim; phase 1) → vectorized ray-cast
-  refine over WKB (pandas_udf, phase 2; exact reference crossing rule).
+  BroadcastNestedLoopJoin over tiny dim; phase 1) → crossing-parity
+  refine over the zones' compiled segment arrays (JVM expression, phase 2;
+  exact reference crossing rule).
 
   engine, cell-bucketed strategy (zones large — the 100 TB path):
   zones explode to covering hex cells (kernels/hexcell.cover_bbox superset)
@@ -26,18 +27,14 @@ zone columns for every containment pair (inner-join semantics).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from ..functions.barrier import once
 from ..functions.cells_sql import hex_cell
 from ..kernels import hexcell as HX
-from ..kernels import pip as PIP
 from ..kernels import wkb as W
 
 
@@ -122,24 +119,6 @@ def _inside_expr(lat: str = "lat", lon: str = "lon", polys: str = "polys") -> st
     return (
         f"exists({polys}, p -> {outer} AND NOT exists(slice(p, 2, size(p) - 1), h -> {hole}))"
     )
-
-
-@F.pandas_udf(BooleanType())
-def _raycast_contains(lat: pd.Series, lon: pd.Series, geom: pd.Series) -> pd.Series:
-    """Vectorized exact refine: groups the Arrow batch by distinct geometry
-    and runs the numpy ray-cast kernel once per geometry (zones are few and
-    repeated after the join, so each batch has O(#zones) distinct buffers)."""
-    out = np.zeros(len(lat), dtype=bool)
-    la = lat.to_numpy(dtype=np.float64, na_value=np.nan)
-    lo = lon.to_numpy(dtype=np.float64, na_value=np.nan)
-    # group row indices by geometry buffer
-    codes, uniques = pd.factorize(geom)
-    for gi, buf in enumerate(uniques):
-        m = codes == gi
-        if buf is None or not m.any():
-            continue
-        out[m] = PIP.points_in_wkb(lo[m], la[m], bytes(buf), test_envelope=True)
-    return pd.Series(out)
 
 
 def _polys_of(buf: bytes):
@@ -254,7 +233,8 @@ def _ring_inside_literal(ring, lat: str, lon: str) -> str:
 
 def _inside_literal_expr(buf: bytes, lat: str, lon: str) -> str:
     """Point-in-(multi)polygon with the zone geometry compiled to literal
-    arithmetic (driver-side zone compile taken to its end point)."""
+    arithmetic (driver-side zone compile taken to its end point). Not on
+    the join path; the scaling tools use it as a codegen-only CPU kernel."""
     polys = []
     for rings in W.decode_polygons(buf):
         outer = _ring_inside_literal(rings[0], lat, lon)
@@ -273,40 +253,10 @@ def pip_join_broadcast(
     zones: DataFrame,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    refine: str = "sql",
 ) -> DataFrame:
-    """Broadcast strategy: bbox theta-join (phase 1) + exact refine (phase 2).
-
-    refine='sql' (default): crossing-parity over compiled segment arrays
-    via higher-order functions — general but CodegenFallback (interpreted).
-    refine='codegen': zone geometries compile to LITERAL unrolled
-    arithmetic inside the join condition — zero allocation, whole-stage
-    codegen, scales with cores (the N->4N bench path); driver-collects the
-    zone table, so small zone sets only. refine='pandas': the vectorized
-    numpy kernel via pandas_udf (parity testing)."""
-    z = _zone_envelopes(zones)
-    if refine == "codegen":
-        rows = zones.select("zone_id", "geometry").collect()
-        whens = " ".join(
-            f"WHEN {int(r['zone_id'])} THEN "
-            + _inside_literal_expr(bytes(r["geometry"]), lat_col, lon_col)
-            for r in rows
-        )
-        case = f"(CASE zone_id {whens} ELSE false END)"
-        # gate the (large) refine behind the bbox test with an explicit
-        # CASE: conjunct evaluation order inside a join condition is not
-        # guaranteed, and evaluating the refine per candidate PAIR costs
-        # ~|zones| x segment-count per page row
-        bbox = (
-            f"({lat_col} IS NOT NULL AND {lon_col} >= minx AND {lon_col} <= maxx "
-            f"AND {lat_col} >= miny AND {lat_col} <= maxy)"
-        )
-        cond = F.expr(f"CASE WHEN {bbox} THEN {case} ELSE false END")
-        return pages.join(F.broadcast(z), cond, "inner").drop(
-            "minx", "miny", "maxx", "maxy"
-        )
-    if refine == "sql":
-        z = _with_polys(z)
+    """Broadcast strategy: bbox theta-join (phase 1) + exact refine (phase 2),
+    crossing-parity over the zones' compiled segment arrays."""
+    z = _with_polys(_zone_envelopes(zones))
     lat, lon = F.col(lat_col), F.col(lon_col)
     cond = (
         lat.isNotNull()
@@ -316,14 +266,11 @@ def pip_join_broadcast(
         & (lat <= F.col("maxy"))
     )
     joined = pages.join(F.broadcast(z), cond, "inner")
-    if refine == "sql":
-        # `once` keeps the parity refine OUT of the join condition — pushed
-        # in, it would run per candidate pair (measured 20M evals, 174s)
-        # instead of per bbox-surviving row
-        refined = joined.filter(once(F.expr(_inside_expr(lat_col, lon_col))))
-        return refined.drop("minx", "miny", "maxx", "maxy", "polys")
-    refined = joined.filter(_raycast_contains(lat, lon, F.col("geometry")))
-    return refined.drop("minx", "miny", "maxx", "maxy")
+    # `once` keeps the parity refine OUT of the join condition — pushed
+    # in, it would run per candidate pair (measured 20M evals, 174s)
+    # instead of per bbox-surviving row
+    refined = joined.filter(once(F.expr(_inside_expr(lat_col, lon_col))))
+    return refined.drop("minx", "miny", "maxx", "maxy", "polys")
 
 
 LADDER = (3, 6, 9)  # coarse->fine adaptive cover resolutions
@@ -450,7 +397,6 @@ def pip_join_bucketed(
     lat_col: str = "lat",
     lon_col: str = "lon",
     salt: int | dict = 0,
-    refine: str = "sql",
 ) -> DataFrame:
     """Cell-bucketed equi-join strategy (scale path).
 
@@ -466,7 +412,7 @@ def pip_join_bucketed(
     """
     # compile polys BEFORE the cell explode (the exploded table exceeds
     # the driver-side threshold even for tiny zone sets)
-    zc = zone_cells(_with_polys(zones) if refine == "sql" else zones, res)
+    zc = zone_cells(_with_polys(zones), res)
     p = pages.filter(F.col(lat_col).isNotNull())
     if res is None:
         # stage the ladder cell ids as PROJECTED COLUMNS before the
@@ -516,12 +462,7 @@ def pip_join_bucketed(
     else:
         keys = ["cell"]
     joined = p.join(zc, keys, "inner")
-    if refine == "sql":
-        refined = joined.filter(once(F.expr(_inside_expr(lat_col, lon_col)))).drop("polys")
-    else:
-        refined = joined.filter(
-            _raycast_contains(F.col(lat_col), F.col(lon_col), F.col("geometry"))
-        )
+    refined = joined.filter(once(F.expr(_inside_expr(lat_col, lon_col)))).drop("polys")
     return refined.drop("cell", "_salt") if "_salt" in keys else refined.drop("cell")
 
 

@@ -184,12 +184,11 @@ def stratified_sample(
 
     Output: input columns + sample_rank (1..n_per_key within each key).
     """
+    # a NULL id hashes as '' on both engines: concat_ws would skip it
+    # (md5('42')) where the oracle's concat renders it empty (md5(':42'))
+    sid = F.coalesce(F.col(id_col).cast("string"), F.lit(""))
     w = Window.partitionBy(key_col).orderBy(
-        F.md5(
-            F.concat_ws(
-                ":", F.col(id_col).cast("string"), F.lit(str(seed))
-            )
-        )
+        F.md5(F.concat_ws(":", sid, F.lit(str(seed))))
     )
     return (
         docs.withColumn("sample_rank", F.row_number().over(w).cast("long"))
@@ -209,7 +208,7 @@ def stratified_sample_sql(
         SELECT {id_col}, {key_col},
                ROW_NUMBER() OVER (
                  PARTITION BY {key_col}
-                 ORDER BY md5(concat(CAST({id_col} AS VARCHAR), ':', '{seed}'))
+                 ORDER BY md5(concat(coalesce(CAST({id_col} AS VARCHAR), ''), ':', '{seed}'))
                ) AS sample_rank
         FROM {rel}
       ) WHERE sample_rank <= {n_per_key}

@@ -128,3 +128,63 @@ def sql_haversine(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
         f"POW(SIN(RADIANS(({lon2}) - ({lon1})) / 2), 2))"
     )
     return f"({2.0 * 6378137.0!r} * ASIN(SQRT({a})))"
+
+
+# ------------------------------------------------------------ parity check
+
+ORACLE_TABLES = (
+    "region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents", "embeddings",
+)
+
+
+def duckdb_views(sf_dir: str):
+    """DuckDB connection with one view per parquet table of `sf_dir` —
+    the relations every __spark_entry__.oracle_sql() entry reads."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ORACLE_TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def canon(df):
+    """Order-insensitive form of a pandas result: columns by name, bytes
+    as hex, rows sorted."""
+    df = df[sorted(df.columns)].copy()
+    for c in df.columns:
+        if df[c].dtype == object:
+            df[c] = df[c].apply(
+                lambda v: v.hex() if isinstance(v, (bytes, bytearray)) else v
+            )
+    return df.sort_values(list(df.columns), ignore_index=True)
+
+
+def frame_mismatches(got, exp) -> list[str]:
+    """How a Spark result differs from its oracle (both pandas frames):
+    column names, row count, then exact values per column with NULL ==
+    NULL, all order-insensitive. Empty when they match."""
+    g, e = canon(got), canon(exp)
+    if list(g.columns) != list(e.columns):
+        return [f"columns {list(g.columns)} vs {list(e.columns)}"]
+    if len(g) != len(e):
+        return [f"rows {len(g)} vs {len(e)}"]
+    out = []
+    for c in g.columns:
+        a, b = g[c], e[c]
+        try:
+            eq = (a.values == b.values) | (a.isna().values & b.isna().values)
+            if eq.all():
+                continue
+        except Exception as ex:  # noqa: BLE001
+            out.append(f"col {c} compare error {ex}")
+            continue
+        bad = (~eq).nonzero()[0][:5]
+        out.append(
+            f"col {c} mismatch rows {bad.tolist()}:"
+            + "".join(f"\n   got={a.iloc[i]!r} exp={b.iloc[i]!r}" for i in bad)
+        )
+    return out

@@ -121,7 +121,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
         # WholeStageCodegen class cache: the default 100 entries thrash
-        # under a 121-query sweep — an evicted shared subplan class makes
+        # under the 123-query sweep — an evicted shared subplan class makes
         # a later family member (overlay_union = intersection + 2x erase)
         # re-pay ~10s of janino compile mid-run. Static conf, so it must
         # be set at builder time. ~50KB source per class: worst case a

@@ -188,3 +188,24 @@ def test_stratified_sample_deterministic_across_partitioning(spark, sf_dir):
     c = {(r["lang"], r["doc_id"], r["sample_rank"])
          for r in TS.stratified_sample(docs, seed=7).collect()}
     assert a != c
+
+
+def test_stratified_sample_null_id_matches_oracle(spark):
+    """A NULL id ranks at the same place in Spark and in the DuckDB
+    oracle. The ids are chosen so that md5(':42') (NULL rendered empty)
+    falls inside the 3-row quota and md5('42') (NULL skipped) does not."""
+    import duckdb
+
+    rows = [(i, "a") for i in range(1, 7)] + [(None, "a")]
+    docs = spark.createDataFrame(rows, "doc_id long, lang string")
+    got = {(r["doc_id"], r["lang"], r["sample_rank"])
+           for r in TS.stratified_sample(docs, n_per_key=3).collect()}
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE docs AS SELECT CAST(doc_id AS BIGINT) AS doc_id, lang "
+        "FROM (VALUES (1, 'a'), (2, 'a'), (3, 'a'), (4, 'a'), (5, 'a'), "
+        "(6, 'a'), (NULL, 'a')) t(doc_id, lang)"
+    )
+    exp = set(con.execute(TS.stratified_sample_sql("docs", n_per_key=3)).fetchall())
+    assert got == exp
+    assert (None, "a", 2) in got

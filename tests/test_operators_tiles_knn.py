@@ -127,14 +127,3 @@ def test_entry_smoke(spark):
 
     df = E.entry(spark)
     assert df.count() > 0
-
-
-def test_pip_codegen_refine_matches_sql(spark, pages):
-    """Literal-compiled (codegen) refine == HOF refine on the driver data."""
-    z = zones_df(spark)
-    a = {(r["url"], r["zone_id"]) for r in pip_join_broadcast(pages, z).collect()}
-    c = {
-        (r["url"], r["zone_id"])
-        for r in pip_join_broadcast(pages, z, refine="codegen").collect()
-    }
-    assert a == c and len(a) > 0
