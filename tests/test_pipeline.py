@@ -1,9 +1,12 @@
 """End-to-end checkpointed pipeline: output parity + resume no-op."""
 
+import os
 import subprocess
 import sys
 
 from pyspark.sql import functions as F
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
@@ -12,7 +15,7 @@ def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
         sys.executable, "-m", "gdal_spark.pipeline",
         "--sf-dir", sf_dir, "--store", store, "--zoom", "8",
     ]
-    r1 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo",
+    r1 = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO,
                         timeout=900)
     assert r1.returncode == 0, r1.stderr[-2000:]
 
@@ -36,8 +39,8 @@ def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
 
     # resume: second invocation commits nothing new
     batches = {s: cs.committed_batches(s) for s in ("index", "pip", "pixels", "pyramid")}
-    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo",
+    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO,
                         timeout=900)
-    assert r2.returncode == 0
+    assert r2.returncode == 0, r2.stderr[-2000:]
     for s, b in batches.items():
         assert cs.committed_batches(s) == b, s
