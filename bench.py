@@ -4,10 +4,6 @@ Runs each __spark_entry__ query at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], then the full synthetic
 pipeline (generate -> extract -> PIP join -> rasterize -> pyramid) at
 BENCH_PAGES rows, and prints ONE JSON line.
-
-Scaling-efficiency evidence (BASELINE.md protocol) comes from
-tools/scaling_bench.py which runs the same pipeline at two parallelism
-levels; this file is the per-round driver entry.
 """
 
 from __future__ import annotations
@@ -19,8 +15,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 import __spark_entry__ as E  # noqa: E402
 from gdal_spark.operators import tiles as TI  # noqa: E402
 from gdal_spark.operators.pages import extract_geo, synthetic_pages  # noqa: E402
@@ -29,31 +23,12 @@ from gdal_spark.operators.zones import zones_df  # noqa: E402
 from gdal_spark.session import get_spark  # noqa: E402
 
 
-def prepare_pages(spark, n_pages: int, path: str) -> str:
-    """Write the deterministic 5-col pages table once (bench input —
-    at real scale pages are READ, not generated; benching the generator
-    mostly measures this box's weak memory bandwidth)."""
-    import os as _os
-
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        (
-            synthetic_pages(spark, n_pages)
-            .select("url", "warc_ts", "html", "text", "lang")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
-
-
-def run_pipeline(spark, n_pages: int, input_path: str | None = None) -> dict:
+def run_pipeline(spark, n_pages: int) -> dict:
     """Full north-star pipeline on synthetic pages; returns timings."""
     t0 = time.time()
-    if input_path is not None:
-        pages = spark.read.parquet(input_path)
-    else:
-        pages = synthetic_pages(spark, n_pages).select(
-            "url", "warc_ts", "html", "text", "lang"
-        )
+    pages = synthetic_pages(spark, n_pages).select(
+        "url", "warc_ts", "html", "text", "lang"
+    )
     p = extract_geo(pages)
     j = pip_join_broadcast(p, zones_df(spark))
     n_joined = j.count()
@@ -70,33 +45,6 @@ def run_pipeline(spark, n_pages: int, input_path: str | None = None) -> dict:
         "pyramid_sec": round(t_pyr - t_join, 3),
         "total_sec": round(t_pyr - t0, 3),
         "pages_per_sec": round(n_pages / (t_pyr - t0), 1),
-    }
-
-
-def run_minhash_bench(spark, n_docs: int) -> dict:
-    """Compute-dense stage: MinHash signatures + band digests over
-    synthetic docs (~400 md5 evaluations per doc, data fits in cache).
-    Complements the pipeline benchmark: the pipeline is memory-bandwidth
-    bound on this sandbox VM, this stage is CPU bound, so together they
-    bracket the engine's scaling behavior."""
-    from gdal_spark.operators.dedup import minhash_signatures
-
-    t0 = time.time()
-    docs = spark.range(n_docs).selectExpr(
-        "id AS doc_id",
-        "concat_ws(' ', transform(sequence(0, 29), "
-        "i -> substr(md5(concat(CAST(id AS STRING), ':', CAST(i AS STRING))), 1, 6))) AS text",
-    )
-    sigs = minhash_signatures(docs)
-    n = sigs.agg(
-        F.count_distinct("band_0", "band_1", "band_2", "band_3").alias("n")
-    ).collect()[0]["n"]
-    dt = time.time() - t0
-    return {
-        "docs": n_docs,
-        "distinct_sigs": int(n),
-        "total_sec": round(dt, 3),
-        "docs_per_sec": round(n_docs / dt, 1),
     }
 
 

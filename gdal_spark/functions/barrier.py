@@ -31,7 +31,7 @@ def cheap_once(col: Column) -> Column:
     optimizer (a range-based comparison fold on Rand) — the barrier
     silently vanished and hex_cell's cube-rounding re-inlined the
     mercator subtrees ~9x, blowing generated methods past the JVM's
-    hard 64KB limit (janino fail -> interpreted fallback; found by
-    tools/janino_hunt.py). spark_partition_id() comparisons survive
+    hard 64KB limit (janino fail -> interpreted fallback; the Tier-1
+    codegen gate now fails on it). spark_partition_id() comparisons survive
     (pinned by tests/test_plans.py::test_cheap_once_survives_optimizer)."""
     return F.when(F.spark_partition_id() >= F.lit(-1), col)

@@ -40,8 +40,8 @@ def _axial_round_cols(qf: Column, rf: Column):
 def hex_cell(lat: Column, lon: Column, res: int, barrier: bool = True) -> Column:
     """lat/lon Columns -> int64 hex cell id at res. NULL-safe (NULL in/out).
 
-    Codegen shape (rederived with tools/janino_hunt.py after Spark 4.1's
-    optimizer started folding the old `rand() >= -1` barrier away):
+    Codegen shape (rederived after Spark 4.1's optimizer started folding
+    the old `rand() >= -1` barrier away; the Tier-1 codegen gate pins it):
 
       * the INTERNALS stay fully DETERMINISTIC — the cube-rounding CASE
         references the qf/rf mercator subtrees ~9 times, and codegen
@@ -77,7 +77,8 @@ def with_hex_cells(df, lat_col: str = "lat", lon_col: str = "lon", resolutions=(
     materialized columns), and deterministic trees let codegen
     subexpression elimination dedup the repeated qf/rf subtrees — four
     barriered CASE branches are excluded from that dedup and overflow
-    the 64KB method limit (janino fallback; tools/janino_hunt.py)."""
+    the 64KB method limit (janino fallback; the Tier-1 codegen gate
+    fails on it)."""
     return df.select(
         "*",
         *[

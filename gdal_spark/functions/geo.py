@@ -34,20 +34,6 @@ def mercator_y(lat: Column) -> Column:
     return my * F.lit(ORIGIN_SHIFT) / F.lit(180.0)
 
 
-def inv_mercator_lon(mx: Column) -> Column:
-    """MetersToLatLon lon (gdal2tiles.py:434)."""
-    return mx / F.lit(ORIGIN_SHIFT) * F.lit(180.0)
-
-
-def inv_mercator_lat(my: Column) -> Column:
-    """MetersToLatLon lat (gdal2tiles.py:435-441)."""
-    lat = my / F.lit(ORIGIN_SHIFT) * F.lit(180.0)
-    pi = 3.141592653589793
-    return F.lit(180.0 / pi) * (
-        F.lit(2.0) * F.atan(F.exp(lat * F.lit(pi / 180.0))) - F.lit(pi / 2.0)
-    )
-
-
 def resolution(zoom: int) -> float:
     return INITIAL_RESOLUTION / (2**zoom)
 
@@ -62,19 +48,9 @@ def pixels_to_tile(p: Column) -> Column:
     return (F.ceil(p / F.lit(float(TILE_SIZE))) - F.lit(1)).cast("long")
 
 
-def tile_x(lon: Column, zoom: int) -> Column:
-    """lon -> TMS tile x at zoom (composition, all codegen)."""
-    return pixels_to_tile(pixels_x(mercator_x(lon), zoom))
-
-
 def tile_y_tms(lat: Column, zoom: int) -> Column:
     """lat -> TMS tile y at zoom."""
     return pixels_to_tile(pixels_x(mercator_y(clip_lat(lat)), zoom))
-
-
-def tile_y_google(lat: Column, zoom: int) -> Column:
-    """Google/XYZ y = (2^z - 1) - ty_tms (gdal2tiles.py:511-515)."""
-    return F.lit(2**zoom - 1) - tile_y_tms(lat, zoom)
 
 
 def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:

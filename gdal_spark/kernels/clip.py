@@ -84,17 +84,6 @@ def clip_ring_rect(ring, minx, miny, maxx, maxy) -> np.ndarray:
     return P
 
 
-def clip_ring_band(ring, axis: int, lo: float, hi: float) -> np.ndarray:
-    """Clip one ring to the band lo <= coord[axis] <= hi only (two of the
-    four half-planes). Lets the fishnet refine share the vertical-strip
-    clip across every cell row of the same column."""
-    P = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
-    if len(P) > 1 and P[0, 0] == P[-1, 0] and P[0, 1] == P[-1, 1]:
-        P = P[:-1]
-    P = _halfplane(P, axis, float(lo), True)
-    return _halfplane(P, axis, float(hi), False)
-
-
 def finish_ring(P: np.ndarray) -> np.ndarray:
     """Dedup consecutive duplicates of an open ring (the final step
     clip_ring_rect applies after its four half-planes)."""

@@ -97,15 +97,6 @@ def latlon_to_cell(lat, lon, res):
     return pack(np.full(q.shape, int(res), dtype=np.int64), q, r)
 
 
-def cell_center(cell):
-    """Cell id -> (lat, lon) of hex center."""
-    from .mercator import meters_to_latlon
-
-    res, q, r = unpack(cell)
-    mx, my = axial_to_meters(q, r, res.astype(np.float64)[0] if res.ndim else res)
-    return meters_to_latlon(mx, my)
-
-
 def parent(cell, parent_res: int):
     """Approximate-hierarchy parent: re-index the child center at coarser res
     (hex grids are not perfectly nested; real H3 makes the same ~approximation

@@ -43,10 +43,6 @@ from ..kernels import geomops as G
 _QD = 9  # vertex quantization decimals for edge/vertex keys
 
 
-def _vkey(x, y):
-    return f"{round(x, _QD)!r}:{round(y, _QD)!r}"
-
-
 def _explode_ring_vertices(df: DataFrame, geom_col: str = "geometry"):
     """(zone_id, ring_idx, vidx, x, y) — one row per ring vertex (closed
     ring WITHOUT the duplicate closing vertex)."""

@@ -425,25 +425,6 @@ def _tok_val(tok: str, duck: bool) -> str:
     return "(" + " + ".join(parts) + ")"
 
 
-def _simhash_expr(text_col: str, duck: bool, vals_col: str | None = None) -> str:
-    """16-bit simhash. When vals_col is given it must hold the per-token
-    md5-derived ints (computed ONCE — the md5 is 16x hotter otherwise)."""
-    tf = "list_transform" if duck else "transform"
-    if vals_col is None:
-        t = f"str_split({text_col}, ' ')" if duck else f"split({text_col}, ' ')"
-        vals = f"{tf}({t}, tok -> {_tok_val('tok', duck)})"
-    else:
-        vals = vals_col
-    bits = []
-    for i in range(16):
-        vote = f"{tf}({vals}, v -> 2 * (CAST(FLOOR(v / {2 ** i}) AS BIGINT) % 2) - 1)"
-        total = (
-            f"list_sum({vote})" if duck else f"aggregate({vote}, 0L, (acc, x) -> acc + x)"
-        )
-        bits.append(f"(CASE WHEN {total} > 0 THEN {2 ** i} ELSE 0 END)")
-    return "(" + " + ".join(bits) + ")"
-
-
 def _bit_vote_aggs(val_col: str, nbits: int, prefix: str) -> list:
     """One SUM aggregate per bit of the per-token value column — the
     codegen replacement for nbits interpreted transform+aggregate HOF
@@ -480,15 +461,6 @@ def simhash(corpus: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select(
         "doc_id", F.expr(_bits_total(16, "_b")).cast("int").alias("simhash")
     )
-
-
-def simhash_sql(rel: str = "corpus", text_col: str = "text") -> str:
-    vals = f"list_transform(str_split({text_col}, ' '), tok -> {_tok_val('tok', True)})"
-    return f"""
-      SELECT doc_id,
-             CAST({_simhash_expr(text_col, True, vals_col='_tv')} AS INTEGER) AS simhash
-      FROM (SELECT doc_id, {vals} AS _tv FROM {rel})
-    """
 
 
 def _tok_val32(tok: str, duck: bool, off: int) -> str:

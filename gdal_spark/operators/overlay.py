@@ -41,16 +41,17 @@ def fishnet_overlay(
     """(zone rows) -> (zone_id, fx, fy, area [, wkb]) for every fishnet
     cell [fx*cell, (fx+1)*cell) x [fy*cell, (fy+1)*cell) with a nonzero
     intersection area. Exact for arbitrary polygons (rect clip)."""
-    from .pip_join import _zone_envelopes
+    from .pip_join import ENV_COLS, _zone_envelopes
 
+    minx, miny, maxx, maxy = ENV_COLS
     z = _zone_envelopes(zones)
     cand = (
         z.withColumn(
             "fx",
             F.explode(
                 F.sequence(
-                    F.floor(F.col("minx") / cell).cast("long"),
-                    F.floor(F.col("maxx") / cell).cast("long"),
+                    F.floor(F.col(minx) / cell).cast("long"),
+                    F.floor(F.col(maxx) / cell).cast("long"),
                 )
             ),
         )
@@ -58,8 +59,8 @@ def fishnet_overlay(
             "fy",
             F.explode(
                 F.sequence(
-                    F.floor(F.col("miny") / cell).cast("long"),
-                    F.floor(F.col("maxy") / cell).cast("long"),
+                    F.floor(F.col(miny) / cell).cast("long"),
+                    F.floor(F.col(maxy) / cell).cast("long"),
                 )
             ),
         )
@@ -127,7 +128,9 @@ def overlay_intersection(
     vectorized Sutherland-Hodgman. Areas are exact; keep_wkb emits the
     banded piece multipolygon (see polyclip docstring)."""
     from ..kernels import polyclip as PC
-    from .pip_join import _zone_envelopes
+    from .pip_join import ENV_COLS, _zone_envelopes
+
+    minx, miny, maxx, maxy = ENV_COLS
 
     def cells(df, prefix):
         e = _zone_envelopes(df)
@@ -136,8 +139,8 @@ def overlay_intersection(
                 "cx",
                 F.explode(
                     F.sequence(
-                        F.floor(F.col("minx") / cell).cast("long"),
-                        F.floor(F.col("maxx") / cell).cast("long"),
+                        F.floor(F.col(minx) / cell).cast("long"),
+                        F.floor(F.col(maxx) / cell).cast("long"),
                     )
                 ),
             )
@@ -145,18 +148,18 @@ def overlay_intersection(
                 "cy",
                 F.explode(
                     F.sequence(
-                        F.floor(F.col("miny") / cell).cast("long"),
-                        F.floor(F.col("maxy") / cell).cast("long"),
+                        F.floor(F.col(miny) / cell).cast("long"),
+                        F.floor(F.col(maxy) / cell).cast("long"),
                     )
                 ),
             )
             .select(
                 F.col("zone_id").alias(f"{prefix}_id"),
                 F.col("geometry").alias(f"{prefix}_geom"),
-                F.col("minx").alias(f"{prefix}_minx"),
-                F.col("miny").alias(f"{prefix}_miny"),
-                F.col("maxx").alias(f"{prefix}_maxx"),
-                F.col("maxy").alias(f"{prefix}_maxy"),
+                F.col(minx).alias(f"{prefix}_minx"),
+                F.col(miny).alias(f"{prefix}_miny"),
+                F.col(maxx).alias(f"{prefix}_maxx"),
+                F.col(maxy).alias(f"{prefix}_maxy"),
                 "cx",
                 "cy",
             )
@@ -275,7 +278,9 @@ def _overlay_per_feature(
     a: DataFrame, b: DataFrame, cell: float, op: str, passthrough: bool
 ) -> DataFrame:
     from ..kernels import makevalid as MV
-    from .pip_join import _zone_envelopes
+    from .pip_join import ENV_COLS, _zone_envelopes
+
+    minx, miny, maxx, maxy = ENV_COLS
 
     def cells(df, prefix):
         e = _zone_envelopes(df)
@@ -284,8 +289,8 @@ def _overlay_per_feature(
                 "cx",
                 F.explode(
                     F.sequence(
-                        F.floor(F.col("minx") / cell).cast("long"),
-                        F.floor(F.col("maxx") / cell).cast("long"),
+                        F.floor(F.col(minx) / cell).cast("long"),
+                        F.floor(F.col(maxx) / cell).cast("long"),
                     )
                 ),
             )
@@ -293,18 +298,18 @@ def _overlay_per_feature(
                 "cy",
                 F.explode(
                     F.sequence(
-                        F.floor(F.col("miny") / cell).cast("long"),
-                        F.floor(F.col("maxy") / cell).cast("long"),
+                        F.floor(F.col(miny) / cell).cast("long"),
+                        F.floor(F.col(maxy) / cell).cast("long"),
                     )
                 ),
             )
             .select(
                 F.col("zone_id").alias(f"{prefix}_id"),
                 F.col("geometry").alias(f"{prefix}_geom"),
-                F.col("minx").alias(f"{prefix}_minx"),
-                F.col("miny").alias(f"{prefix}_miny"),
-                F.col("maxx").alias(f"{prefix}_maxx"),
-                F.col("maxy").alias(f"{prefix}_maxy"),
+                F.col(minx).alias(f"{prefix}_minx"),
+                F.col(miny).alias(f"{prefix}_miny"),
+                F.col(maxx).alias(f"{prefix}_maxx"),
+                F.col(maxy).alias(f"{prefix}_maxy"),
                 "cx",
                 "cy",
             )

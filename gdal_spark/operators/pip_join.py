@@ -162,39 +162,44 @@ def _with_polys(zdf: DataFrame, driver_threshold: int = 2000) -> DataFrame:
     return zdf.join(F.broadcast(pdf), "zone_id")
 
 
+# Envelope columns that _zone_envelopes attaches. Reserved names, so a
+# zones frame with its own minx..maxy columns keeps them and still gets
+# its true envelope.
+ENV_COLS = ("_env_minx", "_env_miny", "_env_maxx", "_env_maxy")
+
+
 def _zone_envelopes(zones: DataFrame, driver_threshold: int = 2000) -> DataFrame:
-    """Attach envelope columns (minx..maxy) to zones — equivalent of
+    """Attach envelope columns (ENV_COLS) to zones — equivalent of
     OGRGeometry::getEnvelope. Small tables compile driver-side (no
     python-worker spin-up); past driver_threshold the envelopes come from
     a pandas_udf instead so a direct pip_join_broadcast call on a large
     zones table cannot OOM the driver (same guard as _with_polys).
 
-    Idempotent: input already carrying minx..maxy passes through, so
+    Idempotent: input already carrying ENV_COLS passes through, so
     composed operators (overlay_union = intersection + 2x erase) enrich
     each side ONCE instead of per primitive. The small-side probe is a
     single collect (not count-then-collect): every call used to cost two
     eager driver jobs, and micro-job scheduling latency — not data —
     dominated the composed overlay ops' wall on small layers."""
-    if {"minx", "miny", "maxx", "maxy"} <= set(zones.columns):
+    if set(ENV_COLS) <= set(zones.columns):
         return zones
     head = (
         zones.select("zone_id", "geometry")
         .limit(driver_threshold + 1)
         .collect()
     )
+    env_ddl = ", ".join(f"{c} double" for c in ENV_COLS)
     if len(head) > driver_threshold:
-        from pyspark.sql.types import DoubleType
-
-        @F.pandas_udf("minx double, miny double, maxx double, maxy double")
+        @F.pandas_udf(env_ddl)
         def _env(geom: pd.Series) -> pd.DataFrame:
             vals = [
                 W.envelope(bytes(buf)) if buf is not None else (None,) * 4
                 for buf in geom
             ]
-            return pd.DataFrame(vals, columns=["minx", "miny", "maxx", "maxy"])
+            return pd.DataFrame(vals, columns=list(ENV_COLS))
 
         z = zones.withColumn("_env", _env(F.col("geometry")))
-        return z.select("*", "_env.minx", "_env.miny", "_env.maxx", "_env.maxy").drop("_env")
+        return z.select("*", *[f"_env.{c}" for c in ENV_COLS]).drop("_env")
     env = [
         (r["zone_id"],) + W.envelope(bytes(r["geometry"]))
         for r in head
@@ -203,49 +208,9 @@ def _zone_envelopes(zones: DataFrame, driver_threshold: int = 2000) -> DataFrame
     from ..session import local_df
 
     edf = local_df(spark,
-        env, "zone_id long, minx double, miny double, maxx double, maxy double"
+        env, "zone_id long, " + env_ddl
     )
     return zones.join(F.broadcast(edf), "zone_id")
-
-
-def _ring_inside_literal(ring, lat: str, lon: str) -> str:
-    """Crossing-parity SQL with LITERAL segment coordinates — same rule
-    as _ring_inside but fully unrolled arithmetic (no higher-order
-    functions). HOFs like aggregate()/exists() are CodegenFallback in
-    Spark: they evaluate interpreted with per-row closure allocation,
-    which is memory-bandwidth-bound and stops scaling with cores; the
-    unrolled form stays inside whole-stage codegen."""
-    terms = []
-    for i in range(1, ring.shape[0]):
-        x1, y1 = float(ring[i, 0]), float(ring[i, 1])
-        x2, y2 = float(ring[i - 1, 0]), float(ring[i - 1, 1])
-        crossing = (
-            f"(CASE WHEN (({y1!r} - {lat} > 0.0) AND ({y2!r} - {lat} <= 0.0)) "
-            f"OR (({y2!r} - {lat} > 0.0) AND ({y1!r} - {lat} <= 0.0)) THEN "
-            f"(CASE WHEN (({x1!r} - {lon}) * ({y2!r} - {lat}) - "
-            f"({x2!r} - {lon}) * ({y1!r} - {lat})) "
-            f"/ (({y2!r} - {lat}) - ({y1!r} - {lat})) > 0.0 THEN 1 ELSE 0 END) "
-            f"ELSE 0 END)"
-        )
-        terms.append(crossing)
-    return f"((({' + '.join(terms)}) % 2) = 1)"
-
-
-def _inside_literal_expr(buf: bytes, lat: str, lon: str) -> str:
-    """Point-in-(multi)polygon with the zone geometry compiled to literal
-    arithmetic (driver-side zone compile taken to its end point). Not on
-    the join path; the scaling tools use it as a codegen-only CPU kernel."""
-    polys = []
-    for rings in W.decode_polygons(buf):
-        outer = _ring_inside_literal(rings[0], lat, lon)
-        holes = [_ring_inside_literal(r, lat, lon) for r in rings[1:]]
-        if holes:
-            polys.append(
-                f"({outer} AND NOT ({' OR '.join(holes)}))"
-            )
-        else:
-            polys.append(outer)
-    return "(" + " OR ".join(polys) + ")"
 
 
 def pip_join_broadcast(
@@ -258,19 +223,20 @@ def pip_join_broadcast(
     crossing-parity over the zones' compiled segment arrays."""
     z = _with_polys(_zone_envelopes(zones))
     lat, lon = F.col(lat_col), F.col(lon_col)
+    minx, miny, maxx, maxy = (F.col(c) for c in ENV_COLS)
     cond = (
         lat.isNotNull()
-        & (lon >= F.col("minx"))
-        & (lon <= F.col("maxx"))
-        & (lat >= F.col("miny"))
-        & (lat <= F.col("maxy"))
+        & (lon >= minx)
+        & (lon <= maxx)
+        & (lat >= miny)
+        & (lat <= maxy)
     )
     joined = pages.join(F.broadcast(z), cond, "inner")
     # `once` keeps the parity refine OUT of the join condition — pushed
     # in, it would run per candidate pair (measured 20M evals, 174s)
     # instead of per bbox-surviving row
     refined = joined.filter(once(F.expr(_inside_expr(lat_col, lon_col))))
-    return refined.drop("minx", "miny", "maxx", "maxy", "polys")
+    return refined.drop(*ENV_COLS, "polys")
 
 
 LADDER = (3, 6, 9)  # coarse->fine adaptive cover resolutions
@@ -420,8 +386,9 @@ def pip_join_bucketed(
         # generate_doConsume method that Spark cannot split, and three
         # inlined hex trees push it past the JVM's hard 64KB method
         # limit — janino fails and the whole stage runs interpreted
-        # (found by tools/janino_hunt.py; the staged Project compiles
-        # into its own splittable method and the Generate reads 3 longs)
+        # (the Tier-1 codegen gate fails on it; the staged Project
+        # compiles into its own splittable method and the Generate reads
+        # 3 longs)
         lad = [f"_hexl{r}" for r in LADDER]
         p = (
             p.select(

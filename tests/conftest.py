@@ -11,6 +11,10 @@ def spark():
     from gdal_spark.session import get_spark
 
     s = get_spark(app_name="gdal-spark-tests")
+    # codegen gate: a janino compile failure (e.g. a generated method past
+    # the JVM's 64 KB limit) fails the test instead of silently dropping
+    # the stage to interpreted mode
+    s.conf.set("spark.sql.codegen.fallback", "false")
     yield s
 
 

@@ -134,12 +134,21 @@ def test_overlay_intersection_operator(spark):
     assert abs(W.shoelace_area(bytes(r["wkb"])) - TRI_AREA) < 1e-10
 
 
+CALLER_BBOX = ("minx", "miny", "maxx", "maxy")
+
+
+def _with_caller_bbox(df):
+    """df plus the caller's own (bogus) bbox columns."""
+    return df.select("*", *[F.lit(-999.0).alias(c) for c in CALLER_BBOX])
+
+
 def test_zone_envelopes_idempotent_and_single_probe(spark):
     """_zone_envelopes passes pre-enriched input through unchanged (the
     contract overlay_union relies on to attach envelopes once per side
     instead of once per composed primitive) and computes the same
-    envelope either way."""
-    from gdal_spark.operators.pip_join import _zone_envelopes
+    envelope either way. A caller's own minx..maxy columns do not count
+    as enriched: they are kept and the true envelope is attached."""
+    from gdal_spark.operators.pip_join import ENV_COLS, _zone_envelopes
     from gdal_spark.session import local_df
 
     df = local_df(
@@ -148,11 +157,47 @@ def test_zone_envelopes_idempotent_and_single_probe(spark):
         "zone_id long, geometry binary",
     )
     once = _zone_envelopes(df)
-    assert {"minx", "miny", "maxx", "maxy"} <= set(once.columns)
+    assert set(ENV_COLS) <= set(once.columns)
     twice = _zone_envelopes(once)
     assert twice is once  # enriched input short-circuits — no new probe job
     row = once.collect()[0]
-    assert (row["minx"], row["miny"], row["maxx"], row["maxy"]) == (0, 0, 4, 3)
+    assert tuple(row[c] for c in ENV_COLS) == (0, 0, 4, 3)
+
+    row = _zone_envelopes(_with_caller_bbox(df)).collect()[0]
+    assert tuple(row[c] for c in ENV_COLS) == (0, 0, 4, 3)
+    assert tuple(row[c] for c in CALLER_BBOX) == (-999.0,) * 4
+
+
+def test_caller_bbox_columns_do_not_steer_join_or_overlay(spark):
+    """Zones that carry unrelated minx..maxy columns give the same PIP
+    join and fishnet overlay rows as clean zones, and the join keeps the
+    caller's columns."""
+    from gdal_spark.operators.pip_join import pip_join_broadcast
+    from gdal_spark.session import local_df
+
+    zones = zones_df(spark).filter(F.col("zone_id").isin(101, 103))
+    bogus = _with_caller_bbox(zones)
+    pages = local_df(
+        spark,
+        [("nyc", 40.7, -74.0), ("tokyo", 35.6, 139.69), ("sea", 0.0, 0.0)],
+        "url string, lat double, lon double",
+    )
+
+    def pip(z):
+        return sorted(
+            (r["url"], r["zone_id"]) for r in pip_join_broadcast(pages, z).collect()
+        )
+
+    assert set(CALLER_BBOX) <= set(pip_join_broadcast(pages, bogus).columns)
+    assert pip(bogus) == pip(zones) == [("nyc", 101), ("tokyo", 103)]
+
+    def fishnet(z):
+        return sorted(
+            tuple(r) for r in fishnet_overlay(z.filter("zone_id = 103"), 0.05).collect()
+        )
+
+    clean = fishnet(zones)
+    assert clean and fishnet(bogus) == clean
 
 
 def test_zone_envelopes_udf_path_matches_driver_path(spark):
@@ -166,9 +211,12 @@ def test_zone_envelopes_udf_path_matches_driver_path(spark):
         for i in range(6)
     ]
     df = local_df(spark, rows, "zone_id long, geometry binary")
-    drv = {r["zone_id"]: (r["minx"], r["maxx"]) for r in _zone_envelopes(df).collect()}
+    drv = {
+        r["zone_id"]: (r["_env_minx"], r["_env_maxx"])
+        for r in _zone_envelopes(df).collect()
+    }
     udf = {
-        r["zone_id"]: (r["minx"], r["maxx"])
+        r["zone_id"]: (r["_env_minx"], r["_env_maxx"])
         for r in _zone_envelopes(df, driver_threshold=2).collect()
     }
     assert drv == udf == {i: (float(i), float(i + 2)) for i in range(6)}

@@ -1,23 +1,61 @@
-"""End-to-end checkpointed pipeline: output parity + resume no-op."""
+"""End-to-end checkpointed pipeline in launch mode: `spark-submit
+--py-files` with the package importable only from the shipped zip,
+output parity, and a resume that rewrites nothing."""
 
+import json
 import os
 import subprocess
-import sys
-
-from pyspark.sql import functions as F
+import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _zip_package(dest: str) -> str:
+    """Every gdal_spark/**.py into the zip that --py-files ships."""
+    pkg = os.path.join(REPO, "gdal_spark")
+    with zipfile.ZipFile(dest, "w") as zf:
+        for root, _, files in os.walk(pkg):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    zf.write(full, os.path.relpath(full, REPO))
+    return dest
+
+
+def _snapshot(store: str) -> list:
+    """(path, size, mtime) of every file in the store."""
+    out = []
+    for root, _, files in os.walk(store):
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            out.append((os.path.relpath(os.path.join(root, f), store),
+                        st.st_size, st.st_mtime_ns))
+    return sorted(out)
 
 
 def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
     store = str(tmp_path / "store")
     cmd = [
-        sys.executable, "-m", "gdal_spark.pipeline",
+        "spark-submit",
+        "--master", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]",
+        "--py-files", _zip_package(str(tmp_path / "gdal_spark.zip")),
+        "--conf", "spark.sql.codegen.fallback=false",
+        os.path.join(REPO, "tools", "submit_app.py"),
         "--sf-dir", sf_dir, "--store", store, "--zoom", "8",
     ]
-    r1 = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO,
-                        timeout=900)
-    assert r1.returncode == 0, r1.stderr[-2000:]
+    # no checkout on the child's path: cwd is not the repo and PYTHONPATH
+    # is gone, so gdal_spark resolves from --py-files alone
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+
+    def launch() -> dict:
+        r = subprocess.run(cmd, capture_output=True, text=True, cwd=tmp_path,
+                           env=env, timeout=900)
+        assert r.returncode == 0, r.stderr[-2000:]
+        reports = [json.loads(line) for line in r.stdout.splitlines()
+                   if line.startswith("{")]
+        return {rep["stage"]: rep for rep in reports}
+
+    lineage = launch()
 
     from gdal_spark.operators import tiles as TI
     from gdal_spark.operators.pages import pages_from_documents
@@ -37,10 +75,13 @@ def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
     }
     assert got == exp
 
-    # resume: second invocation commits nothing new
+    # resume: the second launch commits nothing new, leaves every store
+    # file byte-stable and reports the same lineage
     batches = {s: cs.committed_batches(s) for s in ("index", "pip", "pixels", "pyramid")}
-    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO,
-                        timeout=900)
-    assert r2.returncode == 0, r2.stderr[-2000:]
+    snap = _snapshot(store)
+    assert launch() == lineage
+    assert _snapshot(store) == snap
     for s, b in batches.items():
         assert cs.committed_batches(s) == b, s
+    assert set(lineage) == set(batches)
+    assert all(rep["rows"] > 0 for rep in lineage.values()), lineage

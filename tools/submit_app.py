@@ -8,11 +8,12 @@ successful run proves driver + executor imports resolve from --py-files
 alone (pandas_udf closures unpickling gdal_spark.kernels on workers
 included). It delegates to the canonical checkpointed pipeline
 entry point (gdal_spark/pipeline.py), which prints one JSON lineage
-report per stage; tools/submit_smoke.sh runs it twice and asserts the
-second pass resumes with zero new batches.
+report per stage; tests/test_pipeline.py runs it twice from a temporary
+directory and asserts the second pass resumes with zero new batches and
+a byte-stable store.
 
-    spark-submit --master local[8] --py-files /tmp/gdal_spark_submit.zip \
-        tools/submit_app.py --sf-dir /root/testdata/sf0.01 --store /tmp/x
+    spark-submit --master local[4] --py-files gdal_spark.zip \
+        tools/submit_app.py --sf-dir <sf_dir> --store <store_dir>
 """
 
 # no repo on sys.path: gdal_spark must resolve from --py-files
