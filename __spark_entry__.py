@@ -2648,42 +2648,12 @@ def q_overlay_erase(spark, sf_dir):
     """Layer-algebra Erase (ogrlayer.cpp:5806): A features minus the
     union of intersecting B features. B has two mutually-overlapping
     erasers inside A1 (their implicit union punches one hole, area
-    16+16-4=28), a corner notch on A2, and nothing over A3 (anti-join
+    16+16-4=28), a corner notch on A2, and nothing over A3 (untouched
     passthrough). Closed-form oracle."""
-    from gdal_spark.kernels import wkb as W
-    from gdal_spark.operators.geom import wkb_stats_udf
     from gdal_spark.operators.overlay import overlay_erase
-    from gdal_spark.session import local_df
 
-    def rect(zid, x0, y0, x1, y1):
-        return (
-            zid, f"z{zid}", float((x1 - x0) * (y1 - y0)),
-            W.polygon_wkb(
-                [[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]]
-            ),
-        )
-
-    schema = "zone_id long, name string, area double, geometry binary"
-    a = local_df(
-        spark,
-        [rect(1, 0, 0, 10, 10), rect(2, 20, 0, 26, 6), rect(3, 40, 0, 44, 4)],
-        schema,
-    )
-    b = local_df(
-        spark,
-        [rect(11, 2, 2, 6, 6), rect(12, 4, 4, 8, 8), rect(13, 24, 4, 30, 10)],
-        schema,
-    )
-    out = overlay_erase(a, b, cell=16.0)
-    st = wkb_stats_udf()
-    return out.select(
-        "zone_id", st(F.col("geometry")).alias("s"), "area"
-    ).select(
-        F.col("zone_id").cast("int").alias("zone_id"),
-        F.col("s.n_polys").alias("n_polys"),
-        F.col("s.n_rings").alias("n_rings"),
-        F.round("area", 9).alias("area"),
-    ).orderBy("zone_id")
+    a, b = _overlay_fixture_layers(spark)
+    return _overlay_stats(overlay_erase(a, b, cell=16.0), ("zone_id",))
 
 
 def q_overlay_union(spark, sf_dir):
@@ -2691,91 +2661,25 @@ def q_overlay_union(spark, sf_dir):
     pieces + A-erased + B-erased, fields from the contributing side(s).
     Same fixture as overlay_erase; B12-minus-A exercises the b-side
     erase (36-4=32 L-shape), fully-covered B11 is dropped."""
-    from gdal_spark.kernels import wkb as W
-    from gdal_spark.operators.geom import wkb_stats_udf
     from gdal_spark.operators.overlay import overlay_union
-    from gdal_spark.session import local_df
 
-    def rect(zid, x0, y0, x1, y1):
-        return (
-            zid, f"z{zid}", float((x1 - x0) * (y1 - y0)),
-            W.polygon_wkb(
-                [[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]]
-            ),
-        )
-
-    schema = "zone_id long, name string, area double, geometry binary"
-    a = local_df(
-        spark,
-        [rect(1, 0, 0, 10, 10), rect(2, 20, 0, 26, 6), rect(3, 40, 0, 44, 4)],
-        schema,
-    )
-    b = local_df(
-        spark,
-        [rect(11, 2, 2, 6, 6), rect(12, 4, 4, 8, 8), rect(13, 24, 4, 30, 10)],
-        schema,
-    )
-    out = overlay_union(a, b, cell=16.0)
-    st = wkb_stats_udf()
-    return out.select(
-        F.col("zone_a").cast("int").alias("zone_a"),
-        F.col("zone_b").cast("int").alias("zone_b"),
-        st(F.col("geometry")).alias("s"),
-        "area",
-    ).select(
-        "zone_a", "zone_b",
-        F.col("s.n_polys").alias("n_polys"),
-        F.col("s.n_rings").alias("n_rings"),
-        F.round("area", 9).alias("area"),
-    ).orderBy(
-        F.coalesce(F.col("zone_a"), F.lit(-1)),
-        F.coalesce(F.col("zone_b"), F.lit(-1)),
-    )
+    a, b = _overlay_fixture_layers(spark)
+    return _overlay_stats(overlay_union(a, b, cell=16.0))
 
 
 def q_overlay_clip(spark, sf_dir):
     """Layer-algebra Clip (ogrlayer.cpp:5497): A clipped to the union of
     the method layer. A1 keeps the eraser-union octagon (28), A2 keeps
     its 2x2 corner, A3 is outside the method layer and is dropped."""
-    from gdal_spark.kernels import wkb as W
-    from gdal_spark.operators.geom import wkb_stats_udf
     from gdal_spark.operators.overlay import overlay_clip
-    from gdal_spark.session import local_df
 
-    def rect(zid, x0, y0, x1, y1):
-        return (
-            zid, f"z{zid}", float((x1 - x0) * (y1 - y0)),
-            W.polygon_wkb(
-                [[(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]]
-            ),
-        )
-
-    schema = "zone_id long, name string, area double, geometry binary"
-    a = local_df(
-        spark,
-        [rect(1, 0, 0, 10, 10), rect(2, 20, 0, 26, 6), rect(3, 40, 0, 44, 4)],
-        schema,
-    )
-    b = local_df(
-        spark,
-        [rect(11, 2, 2, 6, 6), rect(12, 4, 4, 8, 8), rect(13, 24, 4, 30, 10)],
-        schema,
-    )
-    out = overlay_clip(a, b, cell=16.0)
-    st = wkb_stats_udf()
-    return out.select(
-        F.col("zone_id").cast("int").alias("zone_id"),
-        st(F.col("geometry")).alias("s"),
-        "area",
-    ).select(
-        "zone_id",
-        F.col("s.n_polys").alias("n_polys"),
-        F.col("s.n_rings").alias("n_rings"),
-        F.round("area", 9).alias("area"),
-    ).orderBy("zone_id")
+    a, b = _overlay_fixture_layers(spark)
+    return _overlay_stats(overlay_clip(a, b, cell=16.0), ("zone_id",))
 
 
 def _overlay_fixture_layers(spark):
+    """The layer-algebra oracle fixture: A = three squares, B = two
+    mutually-overlapping erasers inside A1 plus a corner notch on A2."""
     from gdal_spark.kernels import wkb as W
     from gdal_spark.session import local_df
 
@@ -2801,75 +2705,50 @@ def _overlay_fixture_layers(spark):
     return a, b
 
 
-def _overlay_stats(out):
+def _overlay_stats(out, keys=("zone_a", "zone_b")):
+    """(keys..., n_polys, n_rings, area) per output piece, NULL keys
+    first in key order."""
     from gdal_spark.operators.geom import wkb_stats_udf
 
     st = wkb_stats_udf()
     return out.select(
-        F.col("zone_a").cast("int").alias("zone_a"),
-        F.col("zone_b").cast("int").alias("zone_b"),
+        *(F.col(k).cast("int").alias(k) for k in keys),
         st(F.col("geometry")).alias("s"),
         "area",
     ).select(
-        "zone_a", "zone_b",
+        *keys,
         F.col("s.n_polys").alias("n_polys"),
         F.col("s.n_rings").alias("n_rings"),
         F.round("area", 9).alias("area"),
-    ).orderBy(
-        F.coalesce(F.col("zone_a"), F.lit(-1)),
-        F.coalesce(F.col("zone_b"), F.lit(-1)),
-    )
+    ).orderBy(*(F.coalesce(F.col(k), F.lit(-1)) for k in keys))
 
 
 def q_overlay_symdiff(spark, sf_dir):
     """Layer-algebra SymDifference (ogrlayer.cpp:4300) = erase(a,b) +
     erase(b,a), side provenance NULLable (reference nested-loop
     output)."""
-    from gdal_spark.operators.overlay import overlay_erase
+    from gdal_spark.operators.overlay import overlay_symdiff
 
     a, b = _overlay_fixture_layers(spark)
-    ea = overlay_erase(a, b, cell=16.0).select(
-        F.col("zone_id").alias("zone_a"),
-        F.lit(None).cast("long").alias("zone_b"), "area", "geometry",
-    )
-    eb = overlay_erase(b, a, cell=16.0).select(
-        F.lit(None).cast("long").alias("zone_a"),
-        F.col("zone_id").alias("zone_b"), "area", "geometry",
-    )
-    return _overlay_stats(ea.unionByName(eb))
+    return _overlay_stats(overlay_symdiff(a, b, cell=16.0))
 
 
 def q_overlay_identity(spark, sf_dir):
     """Layer-algebra Identity (ogrlayer.cpp:4730) = pairwise a∩b pieces
     + a-minus-b remainders (a's features partitioned by b)."""
-    from gdal_spark.operators.overlay import overlay_erase, overlay_intersection
+    from gdal_spark.operators.overlay import overlay_identity
 
     a, b = _overlay_fixture_layers(spark)
-    inter = overlay_intersection(a, b, cell=16.0, keep_wkb=True).select(
-        "zone_a", "zone_b", "area", F.col("wkb").alias("geometry")
-    )
-    ea = overlay_erase(a, b, cell=16.0).select(
-        F.col("zone_id").alias("zone_a"),
-        F.lit(None).cast("long").alias("zone_b"), "area", "geometry",
-    )
-    return _overlay_stats(inter.unionByName(ea))
+    return _overlay_stats(overlay_identity(a, b, cell=16.0))
 
 
 def q_overlay_update(spark, sf_dir):
     """Layer-algebra Update (ogrlayer.cpp:5148) = a eroded by b, then b
     appended whole (b overwrites a where they overlap)."""
-    from gdal_spark.operators.overlay import overlay_erase
+    from gdal_spark.operators.overlay import overlay_update
 
     a, b = _overlay_fixture_layers(spark)
-    ea = overlay_erase(a, b, cell=16.0).select(
-        F.col("zone_id").alias("zone_a"),
-        F.lit(None).cast("long").alias("zone_b"), "area", "geometry",
-    )
-    bb = b.select(
-        F.lit(None).cast("long").alias("zone_a"),
-        F.col("zone_id").alias("zone_b"), "area", "geometry",
-    )
-    return _overlay_stats(ea.unionByName(bb))
+    return _overlay_stats(overlay_update(a, b, cell=16.0))
 
 
 def q_geom_boolean(spark, sf_dir):

@@ -341,8 +341,9 @@ def main() -> None:
     # (~7s of its r4 10.9s wall). Same marginal-work convention as the
     # dedup family above.
     # overlay_erase warms the overlay family's shared codegen classes
-    # (intersection/erase subplans recur inside union/symdiff/identity/
-    # update): with the default 100-entry codegen cache the sweep evicted
+    # (the candidate join and grouped pass behind erase recur inside
+    # clip/union/symdiff/identity/update): with the default 100-entry
+    # codegen cache the sweep evicted
     # them and whichever family member ran first mid-sweep re-paid ~10s
     # of janino compile (the BENCH overlay_union 9s outlier vs its own
     # 1.8-2.9s history). session.py now also pins

@@ -192,7 +192,7 @@ def cascaded_union(
         [df.schema[c] for c in gcols] + [StructField("geometry", _B())]
     )
 
-    def union_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def union_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         comps = []
         for buf in pdf[geom_col]:
             if buf is not None:

@@ -720,7 +720,7 @@ def triangulate_tiled(
     )
 
     def make_fn(h):
-        def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             tkey = int(key[0])
             i, j = tkey // g, tkey % g
             rx0, ry0 = minx + i * tw, miny + j * th

@@ -175,12 +175,12 @@ def _zone_envelopes(zones: DataFrame, driver_threshold: int = 2000) -> DataFrame
     a pandas_udf instead so a direct pip_join_broadcast call on a large
     zones table cannot OOM the driver (same guard as _with_polys).
 
-    Idempotent: input already carrying ENV_COLS passes through, so
-    composed operators (overlay_union = intersection + 2x erase) enrich
-    each side ONCE instead of per primitive. The small-side probe is a
-    single collect (not count-then-collect): every call used to cost two
-    eager driver jobs, and micro-job scheduling latency — not data —
-    dominated the composed overlay ops' wall on small layers."""
+    Idempotent: input already carrying ENV_COLS passes through, so a
+    caller that enriches a side once can hand it to several operators
+    without a second probe. The small-side probe is a single collect
+    (not count-then-collect): every call used to cost two eager driver
+    jobs, and micro-job scheduling latency — not data — dominated the
+    overlay ops' wall on small layers."""
     if set(ENV_COLS) <= set(zones.columns):
         return zones
     head = (

@@ -8,6 +8,7 @@ partitions sized for local mode but overridable for clusters.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import threading
@@ -21,14 +22,46 @@ from pyspark.sql import SparkSession
 _LOCAL_DF_LOCK = threading.Lock()
 
 
+def _package_zip(pkg_dir: str) -> str:
+    """Zip every .py under pkg_dir (as gdal_spark/...) into the temp dir
+    and return the zip's path.
+
+    The zip is named by a hash of the files' relative paths and bytes, so
+    two checkouts (or two versions of one) on the same box never share a
+    zip whatever their mtimes, and an unchanged package reuses its zip.
+    It is written under a temporary name and renamed into place, so a
+    concurrent session never reads a half-written archive."""
+    blobs = []
+    h = hashlib.sha256()
+    for root, _, files in sorted(os.walk(pkg_dir)):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                rel = os.path.join("gdal_spark", os.path.relpath(full, pkg_dir))
+                with open(full, "rb") as fh:
+                    data = fh.read()
+                h.update(f"{rel}\0{len(data)}\0".encode())
+                h.update(data)
+                blobs.append((rel, data))
+    tmp_dir = tempfile.gettempdir()
+    zip_path = os.path.join(tmp_dir, f"gdal_spark_pkg_{h.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        fd, tmp = tempfile.mkstemp(suffix=".zip.part", dir=tmp_dir)
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for rel, data in blobs:
+                zf.writestr(rel, data)
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make gdal_spark importable on executors regardless of cwd/deploy mode.
 
-    Zips the package once and registers it via addPyFile — the same
-    mechanism `spark-submit --py-files gdal_spark.zip` uses on a real
-    cluster (north rule). Without this, pandas_udf closures that reference
-    gdal_spark.kernels fail to unpickle on workers started outside the
-    repo directory.
+    Zips the package (`_package_zip`) and registers it via addPyFile —
+    the same mechanism `spark-submit --py-files gdal_spark.zip` uses on a
+    real cluster (north rule). Without this, pandas_udf closures that
+    reference gdal_spark.kernels fail to unpickle on workers started
+    outside the repo directory.
     """
     import gdal_spark
 
@@ -42,21 +75,7 @@ def _ship_package(spark: SparkSession) -> None:
         if os.path.isfile(container):
             spark.sparkContext.addPyFile(container)
         return
-    zip_path = os.path.join(tempfile.gettempdir(), "gdal_spark_pkg.zip")
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < max(
-        os.path.getmtime(os.path.join(root, f))
-        for root, _, files in os.walk(pkg_dir)
-        for f in files
-        if f.endswith(".py")
-    ):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join("gdal_spark", os.path.relpath(full, pkg_dir))
-                        zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_package_zip(pkg_dir))
 
 
 def local_df(spark: SparkSession, rows, schema):
@@ -122,7 +141,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # WholeStageCodegen class cache: the default 100 entries thrash
         # under the 123-query sweep — an evicted shared subplan class makes
-        # a later family member (overlay_union = intersection + 2x erase)
+        # a later family member (the overlay ops share one candidate join)
         # re-pay ~10s of janino compile mid-run. Static conf, so it must
         # be set at builder time. ~50KB source per class: worst case a
         # few hundred MB driver-side at 4096, irrelevant at 12g.

@@ -8,20 +8,10 @@ cancel pipeline must produce identical geometry regardless of tiling).
 """
 
 import numpy as np
-import pytest
 
 from gdal_spark.kernels import wkb as W
 from gdal_spark.operators.contour_op import contour_polygons
 from gdal_spark.operators.raster import raster_from_array
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from gdal_spark.session import get_spark
-
-    s = get_spark("test-contour-poly", master="local[4]")
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
 
 
 def _plane(spark, block):

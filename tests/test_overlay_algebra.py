@@ -1,25 +1,16 @@
-"""Layer-algebra Erase/Clip/Union on harder inputs than the oracle
-fixture: multipolygon subjects, holed subjects, erasers crossing part
-boundaries, and cell-size invariance of the candidate discipline."""
+"""Layer-algebra Erase/Clip/Union/SymDifference on harder inputs than the
+oracle fixture: multipolygon subjects, holed subjects, erasers crossing
+part boundaries, and cell-size invariance of the one candidate pass."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from gdal_spark.kernels import wkb as W
 from gdal_spark.operators.overlay import (
     overlay_clip,
     overlay_erase,
+    overlay_symdiff,
     overlay_union,
 )
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from gdal_spark.session import get_spark
-
-    s = get_spark("test-overlay-algebra", master="local[4]")
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
 
 
 def _layer(spark, rows):
@@ -78,7 +69,13 @@ def test_union_area_conservation(spark):
     assert abs(sum(r["area"] for r in rows) - 28.0) < 1e-9
 
 
-def test_cell_size_invariance(spark):
+@pytest.mark.parametrize(
+    "op", [overlay_erase, overlay_union, overlay_symdiff],
+    ids=["erase", "union", "symdiff"],
+)
+def test_cell_size_invariance(spark, op):
+    # erase covers a-side differences, union adds the pair pieces and the
+    # b-side differences, symdiff both sides' differences without pieces
     a = _layer(
         spark,
         [(1, [[_ring(0, 0, 10, 10)]]), (2, [[_ring(20, 0, 26, 6)]])],
@@ -90,8 +87,11 @@ def test_cell_size_invariance(spark):
     outs = []
     for cell in (2.0, 16.0, 64.0):
         rows = sorted(
-            (r["zone_id"], round(r["area"], 9))
-            for r in overlay_erase(a, b, cell=cell).collect()
+            # key columns (zone_id, or zone_a/zone_b with NULLs as -1),
+            # then the rounded area
+            tuple(-1 if v is None else v for v in r[:-2])
+            + (round(r["area"], 9),)
+            for r in op(a, b, cell=cell).collect()
         )
         outs.append(rows)
     assert outs[0] == outs[1] == outs[2]

@@ -85,3 +85,39 @@ def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
         assert cs.committed_batches(s) == b, s
     assert set(lineage) == set(batches)
     assert all(rep["rows"] > 0 for rep in lineage.values()), lineage
+
+
+def test_package_zip_per_checkout(tmp_path, monkeypatch):
+    """Two copies of the package get two zips, each holding its own
+    bytes — also when the later copy's files are edited but older."""
+    import shutil
+    import tempfile
+
+    from gdal_spark.session import _package_zip
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    pkgs = []
+    for name in ("one", "two"):
+        dest = tmp_path / name / "gdal_spark"
+        shutil.copytree(
+            os.path.join(REPO, "gdal_spark"), dest,
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+        pkgs.append(dest)
+    edited = pkgs[1] / "operators" / "overlay.py"
+    edited.write_text(edited.read_text() + "# edited\n")
+    for root, _, files in os.walk(pkgs[1]):
+        for f in files:
+            os.utime(os.path.join(root, f), (1e9, 1e9))
+    zips = [_package_zip(str(p)) for p in pkgs]
+    assert zips[0] != zips[1]
+    for pkg, zp in zip(pkgs, zips):
+        with zipfile.ZipFile(zp) as zf:
+            got = {n: zf.read(n) for n in zf.namelist()}
+        want = {
+            os.path.join("gdal_spark", os.path.relpath(os.path.join(r, f), pkg)):
+                open(os.path.join(r, f), "rb").read()
+            for r, _, fs in os.walk(pkg) for f in fs if f.endswith(".py")
+        }
+        assert got == want
+    assert _package_zip(str(pkgs[0])) == zips[0]

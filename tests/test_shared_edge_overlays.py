@@ -162,17 +162,12 @@ def test_overlay_union_area_conservation(spark, tiling_ab):
 
 def test_overlay_identity_partitions_a(spark, tiling_ab):
     """Identity pieces partition each a-feature exactly (shared borders
-    must not drop or double-count slivers).  Identity = pairwise a∩b
-    pieces + a-minus-b remainders (ogrlayer.cpp:4730 composition, same
-    as q_overlay_identity)."""
-    from gdal_spark.operators.overlay import overlay_erase, overlay_intersection
+    must not drop or double-count slivers): pairwise a∩b pieces plus
+    a-minus-b remainders (ogrlayer.cpp:4730)."""
+    from gdal_spark.operators.overlay import overlay_identity
 
     a, b = tiling_ab
-    inter = overlay_intersection(a, b, cell=2.0).select("zone_a", "area")
-    ea = overlay_erase(a, b, cell=2.0).select(
-        F.col("zone_id").alias("zone_a"), "area"
-    )
-    out = inter.unionByName(ea)
+    out = overlay_identity(a, b, cell=2.0)
     per_a = (
         out.groupBy("zone_a").agg(F.sum("area").alias("s")).collect()
     )

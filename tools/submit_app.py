@@ -13,7 +13,16 @@ directory and asserts the second pass resumes with zero new batches and
 a byte-stable store.
 
     spark-submit --master local[4] --py-files gdal_spark.zip \
+        --driver-memory 12g \
+        --driver-java-options "-XX:+UseG1GC -XX:-DontCompileHugeMethods" \
         tools/submit_app.py --sf-dir <sf_dir> --store <store_dir>
+
+Pass the driver heap and JVM flags on the command line: under
+spark-submit the driver JVM is already running when `get_spark` builds
+its session, so the `spark.driver.memory` and
+`spark.driver.extraJavaOptions` it sets have no effect (the driver
+would run with spark-submit's 1g default heap and without
+-XX:-DontCompileHugeMethods).
 """
 
 # no repo on sys.path: gdal_spark must resolve from --py-files
